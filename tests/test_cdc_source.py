@@ -347,3 +347,39 @@ def test_batch_top_k_prunes_per_partition_not_result(spark, tmp_path):
     assert got == want
     # each of the 4 partitions ships at most k rows
     assert pruned.count() <= 4 * k
+
+
+def test_batch_top_k_breaks_ts_ties_on_event_id(spark, tmp_path):
+    """Rows tied on ``ts`` at the k-th position: the per-partition top-k
+    must keep the smallest ``event_id``s, whatever their file order, so
+    the consumer's ``ORDER BY ts, event_id LIMIT k`` sees exactly the
+    rows a full scan would give."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from tigerbeetle_cdc_nats_spark.sources.cdc_source import read_cdc_batch
+
+    # one row group; the ts=2000 tie is stored in DESCENDING event_id
+    # order, so a ts-only (stable) cut would keep event_ids 9 and 8
+    ids = [10, 9, 8, 7, 1, 20]
+    ts = [1_000, 2_000, 2_000, 2_000, 2_000, 3_000]
+    n = len(ids)
+    tbl = pa.table({
+        "event_id": pa.array(ids, pa.int64()),
+        "ts": pa.array(ts, pa.int64()),
+        "user_id": pa.array([0] * n, pa.int64()),
+        "event_type": pa.array(["t"] * n, pa.string()),
+        "value": pa.array([0.0] * n, pa.float64()),
+        "props": pa.array(["{}"] * n, pa.string()),
+    })
+    path = os.path.join(tmp_path, "events.parquet")
+    pq.write_table(tbl, path)
+
+    k = 3
+    pruned = read_cdc_batch(spark, path, start_ts=0, top_k=k)
+    got = [(r["ts"], r["event_id"])
+           for r in pruned.orderBy("ts", "event_id").limit(k).collect()]
+    assert got == [(1_000, 10), (2_000, 1), (2_000, 7)]
+    assert pruned.count() == k  # one partition ships exactly k rows

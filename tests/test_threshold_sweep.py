@@ -1,7 +1,7 @@
-"""dedup_threshold_sweep's conditional-aggregate + stack() form must equal
-the oracle's sw-explode semantics, including all-zero threshold rows and
-the nested-threshold doc counting (doc in sw(t) iff its max agreement
->= t)."""
+"""The registered dedup_threshold_sweep (conditional-aggregate + stack()
+form), run over a small pairs table, must equal the oracle's sw-explode
+semantics, including all-zero threshold rows and the nested-threshold doc
+counting (doc in sw(t) iff its max agreement >= t)."""
 
 from __future__ import annotations
 
@@ -33,34 +33,31 @@ def _sweep_reference(spark, pairs):
                     .alias("n_docs")))
 
 
-def _sweep_stack(pairs):
-    """The registered query's conditional-aggregate + stack shape."""
-    np_ = pairs.agg(*[
-        F.sum(F.when(F.col("m") >= t, 1).otherwise(0)).cast("bigint")
-        .alias(f"p{t}") for t in SWEEP_MIN_AGREE])
-    dm = (pairs.select(
-        F.explode(F.array("doc_a", "doc_b")).alias("doc_id"), "m")
-        .groupBy("doc_id").agg(F.max("m").alias("mm")))
-    nd = dm.agg(*[
-        F.sum(F.when(F.col("mm") >= t, 1).otherwise(0)).cast("bigint")
-        .alias(f"d{t}") for t in SWEEP_MIN_AGREE])
-    return np_.crossJoin(nd).select(F.expr(
-        "stack({n}, {args}) AS (min_agree, n_pairs, n_docs)".format(
-            n=len(SWEEP_MIN_AGREE),
-            args=", ".join(
-                f"CAST({t} AS BIGINT), coalesce(p{t}, CAST(0 AS BIGINT)), "
-                f"coalesce(d{t}, CAST(0 AS BIGINT))"
-                for t in SWEEP_MIN_AGREE))))
+def _sweep_registered(spark, monkeypatch, pairs, tmp_path):
+    """Run the REGISTERED dedup_threshold_sweep with ``pairs`` standing in
+    for the corpus candidate-pair table (est_jaccard = m / MINHASH_K,
+    exact in binary, so the query's ``m`` round-trips)."""
+    from tigerbeetle_cdc_nats_spark import queries_dedup
+    from tigerbeetle_cdc_nats_spark.operators import dedup as dd
+    from tigerbeetle_cdc_nats_spark.registry import all_queries
+
+    served = pairs.select(
+        "doc_a", "doc_b",
+        (F.col("m") / F.lit(dd.MINHASH_K)).alias("est_jaccard"))
+    monkeypatch.setattr(queries_dedup, "corpus_minhash_pairs",
+                        lambda _spark, _sf_dir: served)
+    return all_queries()["dedup_threshold_sweep"].fn(spark, str(tmp_path))
 
 
-def test_stack_form_matches_explode_form(spark):
+def test_stack_form_matches_explode_form(spark, monkeypatch, tmp_path):
     # doc 1 pairs with 2 (m=16) and 3 (m=9); docs 4-5 at the lowest cut;
     # doc 6 isolated below every threshold via m=7 (never counted)
     pairs = spark.createDataFrame(
         [(1, 2, 16), (1, 3, 9), (4, 5, 8), (6, 7, 7)],
         "doc_a long, doc_b long, m int")
     ref = {tuple(r) for r in _sweep_reference(spark, pairs).collect()}
-    got = {tuple(r) for r in _sweep_stack(pairs).collect()}
+    got = {tuple(r) for r in
+           _sweep_registered(spark, monkeypatch, pairs, tmp_path).collect()}
     assert got == ref
     # nested-threshold spot check: at the top cut only the m=16 pair and
     # its two docs survive
@@ -68,7 +65,9 @@ def test_stack_form_matches_explode_form(spark):
     assert by_t[max(SWEEP_MIN_AGREE)] == (1, 2)
 
 
-def test_stack_form_empty_pairs_keeps_zero_spine(spark):
+def test_stack_form_empty_pairs_keeps_zero_spine(spark, monkeypatch,
+                                                  tmp_path):
     pairs = spark.createDataFrame([], "doc_a long, doc_b long, m int")
-    got = {tuple(r) for r in _sweep_stack(pairs).collect()}
+    got = {tuple(r) for r in
+           _sweep_registered(spark, monkeypatch, pairs, tmp_path).collect()}
     assert got == {(int(t), 0, 0) for t in SWEEP_MIN_AGREE}

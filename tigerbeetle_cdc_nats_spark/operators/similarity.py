@@ -108,16 +108,17 @@ def table_rows(sf_dir: str, table: str = "embeddings") -> int | None:
     key = (os.path.abspath(path), st.st_mtime_ns, st.st_size)
     if key in _ROWS_MEMO:
         return _ROWS_MEMO[key]
+    from tigerbeetle_cdc_nats_spark.sources.cdc_source import parquet_files
+
     try:
         import pyarrow.parquet as pq
 
         if os.path.isdir(path):
             # directory datasets can gain part files without changing the
             # top-level stat (same hazard memo_read_parquet documents):
-            # compute, but never memoize
-            parts = sorted(
-                os.path.join(path, f) for f in os.listdir(path)
-                if f.endswith(".parquet") and not f.startswith((".", "_")))
+            # compute, but never memoize. Part files may sit in nested
+            # (e.g. partition) directories, so the walk is recursive.
+            parts = parquet_files(path)
             if not parts:
                 return None
             return sum(pq.ParquetFile(p).metadata.num_rows for p in parts)

@@ -315,7 +315,7 @@ def q_props_json_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     "cdc_native_scan",
     f"""WITH ev AS ({_EV})
 SELECT event_id, ts, user_id, event_type, value, props
-FROM ev WHERE ts >= {CURSOR_NS + 1} ORDER BY ts LIMIT 4096""",
+FROM ev WHERE ts >= {CURSOR_NS + 1} ORDER BY ts, event_id LIMIT 4096""",
     doc="the same CDC poll served by the NATIVE Python DataSource "
         "(sources/cdc_source.py batch reader): the cursor is the source "
         "OFFSET, pruning at the parquet row-group level from footer "
@@ -337,7 +337,7 @@ def q_cdc_native_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = read_cdc_batch(
         spark, os.path.join(sf_dir, "events.parquet"), start_ts=CURSOR_NS,
         top_k=4096)  # limit pushdown: the global LIMIT below re-applies it
-    return (ev.orderBy("ts").limit(4096)
+    return (ev.orderBy("ts", "event_id").limit(4096)
             .select("event_id", "ts", "user_id", "event_type",
                     F.col("value").cast("double").alias("value"), "props"))
 

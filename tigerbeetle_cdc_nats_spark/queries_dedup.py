@@ -1141,8 +1141,9 @@ def q_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pair/doc counts per candidate threshold, from the stored index.
 
     Scale shape (round 13): the thresholds are NESTED (sw at t+1 is a
-    subset of sw at t), so neither side needs the 9-way threshold explode
-    of the raw pair set the oracle spells out:
+    subset of sw at t), so neither side needs the 5-way
+    (``len(SWEEP_MIN_AGREE)``) threshold explode of the raw pair set the
+    oracle spells out:
 
     - n_pairs(t) = count of pairs with m >= t — one CONDITIONAL column
       per threshold inside a single global aggregate over the pair set;
@@ -1154,8 +1155,9 @@ def q_dedup_threshold_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Both rollups are map-side-combined single passes over the
     session-persisted pairs memo; the two 1-row results cross join (1x1)
-    and a stack() projection emits the 9-row sweep — no threshold-spine
-    join, no explode, and two fewer exchanges than the sw form
+    and a stack() projection emits the 5-row sweep, one row per
+    SWEEP_MIN_AGREE threshold — no threshold-spine join, no explode,
+    and two fewer exchanges than the sw form
     (interleaved A/B at sf0.1: 0.46 -> 0.30 s; rows verified equal).
     Empty pair set: the global aggregates still return one row (NULL
     sums), and the coalesce inside the stack keeps every threshold row

@@ -53,13 +53,18 @@ from tigerbeetle_cdc_nats_spark.config import DEFAULT_EVENT_COUNT_MAX
 _DEFAULT_EVENT_COUNT_MAX = DEFAULT_EVENT_COUNT_MAX
 
 
-def _events_files(path: str) -> list[str]:
+def parquet_files(path: str) -> list[str]:
     """The parquet file set behind ``path`` (a file, a ``.parquet``
-    directory-table, or a directory of files)."""
+    directory-table, or a directory of files, walked recursively). Like
+    Spark's file index it skips ``_``/``.``-prefixed files and directories
+    (``_temporary``, staging dot-files), keeping ``key=value`` partition
+    directories."""
     if os.path.isfile(path):
         return [path]
     out = []
-    for root, _dirs, files in os.walk(path):
+    for root, dirs, files in os.walk(path):
+        dirs[:] = [d for d in dirs
+                   if not d.startswith(("_", ".")) or "=" in d]
         for f in sorted(files):
             if f.endswith(".parquet") and not f.startswith(("_", ".")):
                 out.append(os.path.join(root, f))
@@ -131,7 +136,7 @@ class CdcEventsStreamReader(DataSourceStreamReader):
     def _row_groups(self):
         import pyarrow.parquet as pq
 
-        for f in _events_files(self._path):
+        for f in parquet_files(self._path):
             pf = pq.ParquetFile(f)
             ts_idx = pf.schema_arrow.get_field_index("ts")
             for rg in range(pf.metadata.num_row_groups):
@@ -283,7 +288,7 @@ class CdcEventsBatchReader(DataSourceReader):
         self._lo = int(options.get("startts", 0) or 0)
         self._hi = int(options.get("endts", _TS_MAX) or _TS_MAX)
         # optional per-partition ts-ascending top-k (limit pushdown for
-        # ORDER BY ts LIMIT k consumers — see read_cdc_batch)
+        # ORDER BY ts, event_id LIMIT k consumers — see read_cdc_batch)
         self._top_k = int(options.get("topk", 0) or 0)
 
     def partitions(self):
@@ -302,10 +307,12 @@ class CdcEventsBatchReader(DataSourceReader):
         return self._read_top_k(partition)
 
     def _read_top_k(self, partition: _RowGroupPartition):
-        """The partition's k smallest-ts rows: a global ts-ascending
-        LIMIT k over the scan is a subset of the union of per-partition
-        top-k sets, so the consumer's TakeOrdered result is unchanged
-        while only k rows per row group cross the Arrow boundary."""
+        """The partition's k smallest ``(ts, event_id)`` rows: a global
+        ``ORDER BY ts, event_id LIMIT k`` over the scan is a subset of the
+        union of per-partition top-k sets, so the consumer's TakeOrdered
+        result is unchanged while only k rows per row group cross the
+        Arrow boundary. ``event_id`` breaks ``ts`` ties, so which tied rows
+        survive the cut is determined, not left to file order."""
         import pyarrow as pa
         import pyarrow.compute as pc
 
@@ -315,7 +322,8 @@ class CdcEventsBatchReader(DataSourceReader):
         tbl = pa.Table.from_batches(batches)
         if tbl.num_rows > self._top_k:
             idx = pc.sort_indices(
-                tbl, sort_keys=[("ts", "ascending")])[: self._top_k]
+                tbl, sort_keys=[("ts", "ascending"),
+                                ("event_id", "ascending")])[: self._top_k]
             tbl = tbl.take(idx)
         yield from tbl.to_batches()
 
@@ -379,11 +387,11 @@ def read_cdc_batch(spark, events_path: str, *, start_ts: int = 0,
 
     ``top_k`` is the manual limit-pushdown channel (the Python DataSource
     API exposes no SupportsPushDownLimit): each PARTITION emits only its
-    k smallest-ts rows, so a consumer that applies a global
-    ``ORDER BY ts LIMIT k`` gets identical rows while the Python->JVM
-    Arrow transfer carries k rows per row group instead of the whole
-    pending backlog. Only valid when the consumer really is a
-    ts-ascending top-k."""
+    k smallest ``(ts, event_id)`` rows, so a consumer that applies a
+    global ``ORDER BY ts, event_id LIMIT k`` gets identical rows while the
+    Python->JVM Arrow transfer carries k rows per row group instead of the
+    whole pending backlog. Only valid when the consumer really is a
+    ``(ts, event_id)``-ascending top-k."""
     _register_once(spark)
     reader = (spark.read.format("tb_cdc_events")
               .option("path", events_path)
